@@ -58,9 +58,12 @@ object Cdc {
       if (dropDeletes) base.filter(col(changeCol) =!= "delete") else base
   }
 
-  /** Latest change per key ordered by `_commit_version` (fallback
-    * `_commit_timestamp`, final tiebreak on a stable row id) —
-    * reference `cdc.py:195-209` via a ranking window. */
+  /** Latest change per key ordered by `_commit_version` descending, then
+    * `_commit_timestamp` descending (or by `versionCol` alone when
+    * given) — reference `cdc.py:195-209` via a ranking window. There is
+    * no further tiebreak: when two changes to one key share every
+    * ordering value, which one survives is arbitrary, so callers must
+    * give each key at most one change per version. */
   def dedupeLatest(df: DataFrame, keys: Seq[String], versionCol: Option[Column] = None)
       : DataFrame = {
     val cols = df.columns.toSet

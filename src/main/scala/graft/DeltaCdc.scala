@@ -52,18 +52,34 @@ object MergeStrategy {
   * non-numeric-keyed tables degrade conservatively to the full rewrite.
   *
   * Job structure (matters at scale): the change stream is persisted so its
-  * upstream plan — often a window or join — executes once, not once per
-  * metric; `rows_out` rides the write job via `observe()` plus the
-  * untouched files' `numRecords` stats (no second scan of anything).
+  * upstream plan — often a window or join — executes once. ONE summary
+  * action over it (`groupBy(changeCol)` with a count and, when a merge
+  * prunes an existing table, every numeric key's min/max) yields both the
+  * per-type counters and the pruning bounds; the driver folds the bounds
+  * across the few result rows. `rows_out` rides the write job via
+  * `observe()` plus the untouched files' `numRecords` stats (no second
+  * scan of anything). A deletion-vector merge then runs the payload
+  * write (and the CDF write, with `emitCdf`) on the calling thread and
+  * the bitmap fold beside it on a second one
+  * ([[graft.delta.DeltaWriter.dvMerge]]); the fold's touched-key
+  * broadcast is a plain projection of the cached changes — no window, no
+  * shuffle. A rewrite merge runs only the write (plus the CDF write).
   * Rewrite safety needs no pre-materialization: old files are only
-  * dereferenced in the log commit, never deleted before the new parts land.
+  * dereferenced in the log commit, never deleted before the new parts
+  * land.
   */
 object DeltaCdc {
   /** `txn`: an optional SetTransaction (appId, batchVersion) stamped onto
     * the SAME commit as the merge — the atomic watermark that lets an
     * at-least-once caller skip replayed batches with
     * [[graft.delta.DeltaWriter.lastTxnVersion]] (no window where data
-    * landed without its watermark). */
+    * landed without its watermark).
+    *
+    * Ordering contract of a `Merge`: the latest change per key wins by
+    * `_commit_version` (then `_commit_timestamp`, [[Cdc.dedupeLatest]]).
+    * `changes` must hold at most one change per key per commit version;
+    * two changes to one key with equal ordering values resolve
+    * arbitrarily. */
   def applyCdcDelta(
       spark: SparkSession,
       changes: DataFrame,
@@ -80,12 +96,29 @@ object DeltaCdc {
     val normalized = Cdc.normalizeChangeTypes(changes, changeCol, changeTypeMap)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
-      // one pass for the per-type counters; also populates the cache the
+      val merging = mode == CdcMode.Merge && writer.tableExists(tablePath)
+      // ONE pass for the per-type counters and, when the merge prunes an
+      // existing table, the key bounds; it also populates the cache the
       // merge below reads, so the (possibly expensive) change-stream plan
       // runs exactly once
-      val changeTypes = normalized.groupBy(changeCol).count()
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val numericKeys = if (!merging) Seq.empty else keys.filter(k =>
+        normalized.schema.fields.exists(f =>
+          f.name == k && f.dataType.isInstanceOf[NumericType]))
+      val aggs = count(lit(1)) +: numericKeys.flatMap(k =>
+        Seq(min(col(k)).cast("double"), max(col(k)).cast("double")))
+      val summary = normalized.groupBy(changeCol).agg(aggs.head, aggs.tail: _*)
+        .collect()
+      val changeTypes = summary.map(r => r.getString(0) -> r.getLong(1)).toMap
       val rowsIn = changeTypes.values.sum
+      // the batch's bounds are the min of the per-type mins and the max of
+      // the maxes (the cast to double preserves order; NaN sorts last
+      // under TotalOrdering, as in Spark's min/max)
+      def perType(i: Int): Seq[Double] =
+        summary.toSeq.flatMap(r => Option(r.get(i)).map(_.asInstanceOf[Double]))
+      val ranges = numericKeys.zipWithIndex.map { case (k, i) =>
+        k -> (perType(2 + 2 * i).minOption(Ordering.Double.TotalOrdering),
+          perType(3 + 2 * i).maxOption(Ordering.Double.TotalOrdering))
+      }.toMap
 
       val cdf = if (emitCdf) Some(normalized) else None
       val outObs = Observation()
@@ -99,7 +132,7 @@ object DeltaCdc {
             mergeSchema = true, cdfChanges = cdf, txn = txn)
           val rowsOut = outObs.get("rows_out").asInstanceOf[Long]
           MergeResult(rowsIn, rowsOut, "append", changeTypes)
-        case CdcMode.Merge if !writer.tableExists(tablePath) =>
+        case CdcMode.Merge if !merging =>
           val merged = Cdc.applyCdc(normalized, None, keys, CdcMode.Merge,
             changeCol, Map.empty, dropDeletes)
             .observe(outObs, count(lit(1)).as("rows_out"))
@@ -123,7 +156,7 @@ object DeltaCdc {
             .map(graft.delta.ColumnMapping.physicalNames)
             .getOrElse(Map.empty[String, String])
           val (touched, untouched) =
-            partitionByKeyBounds(normalized, keys, adds, statKeys)
+            partitionByKeyBounds(ranges, adds, statKeys)
           val carried = untouched.map(numRecordsOf(_).getOrElse(0L)).sum
 
           // DV eligibility: every candidate file's logical row count is
@@ -151,10 +184,14 @@ object DeltaCdc {
             // mark the old versions of every touched key deleted (per-file
             // bitmaps; the change-key set broadcasts) and append only the
             // changed keys' post-state: data volume is O(change batch),
-            // surviving rows of touched files are never read or rewritten
-            val touchedKeys = Cdc.dedupeLatest(
-              Cdc.prepareChanges(normalized, changeCol, CdcMode.Merge, dropDeletes),
-              keys).select(keys.map(col): _*).distinct()
+            // surviving rows of touched files are never read or rewritten.
+            // The touched keys are the prepared changes' keys: the latest-
+            // per-key dedup keeps exactly one row per such key, and a
+            // left_semi join ignores duplicates on its build side, so the
+            // broadcast needs neither the dedup window nor a distinct
+            val touchedKeys =
+              Cdc.prepareChanges(normalized, changeCol, CdcMode.Merge, dropDeletes)
+                .select(keys.map(col): _*)
             val marked = writer.scanAddsWithRowMeta(tablePath, touched)
               .join(broadcast(touchedKeys), keys, "left_semi")
               .select(col(writer.RowMetaFile), col(writer.RowMetaIndex))
@@ -188,7 +225,8 @@ object DeltaCdc {
   }
 
   /** Split the table's active files into (touched, untouched) by the change
-    * batch's per-key min/max bounds. A file is untouched only when its
+    * batch's per-key min/max bounds (`ranges`, logical key names; the
+    * summary action computes them). A file is untouched only when its
     * stats prove NO change key can live in it (the stats bounding-box
     * argument: every change key lies inside the per-column [min,max] box,
     * so a file disjoint from the box in ANY key column matches nothing).
@@ -196,24 +234,14 @@ object DeltaCdc {
     * bounds, files without stats or without `numRecords` count as touched,
     * and no-numeric-keys-at-all degrades to touching everything (the
     * reference's full rewrite). */
-  private def partitionByKeyBounds(changes: DataFrame, keys: Seq[String],
+  private def partitionByKeyBounds(
+      ranges: Map[String, (Option[Double], Option[Double])],
       adds: Seq[DeltaAction.AddFile],
-      statKeys: Map[String, String] = Map.empty)
+      statKeys: Map[String, String])
       : (Seq[DeltaAction.AddFile], Seq[DeltaAction.AddFile]) = {
-    val numericKeys = keys.filter(k =>
-      changes.schema.fields.exists(f =>
-        f.name == k && f.dataType.isInstanceOf[NumericType]))
-    if (numericKeys.isEmpty || adds.isEmpty) return (adds, Seq.empty)
-    // one scalar row off the already-persisted change stream
-    val aggs = numericKeys.flatMap(k =>
-      Seq(min(col(k)).cast("double"), max(col(k)).cast("double")))
-    val row = changes.agg(aggs.head, aggs.tail: _*).head()
-    val ranges = numericKeys.zipWithIndex.map { case (k, i) =>
-      statKeys.getOrElse(k, k) ->
-        (Option(row.get(2 * i)).map(_.asInstanceOf[Double]),
-         Option(row.get(2 * i + 1)).map(_.asInstanceOf[Double]))
-    }.toMap
-    val (kept, _) = DeltaStats.prune(adds, ranges)
+    if (ranges.isEmpty || adds.isEmpty) return (adds, Seq.empty)
+    val (kept, _) = DeltaStats.prune(adds,
+      ranges.map { case (k, r) => statKeys.getOrElse(k, k) -> r })
     val keptPaths = kept.map(_.path).toSet
     val (skippable, uncounted) = adds.filterNot(a => keptPaths(a.path))
       .partition(numRecordsOf(_).isDefined)

@@ -409,8 +409,9 @@ case class DvProbeExpr(
 
   override def prettyName: String =
     if (oldMeta.isEmpty) "dv_deleted" else "dv_cdf_delta"
-  override def toString: String =
-    s"$prettyName(${pathExpr}, ${idxExpr}, files=${meta.value.size})"
+  // never dereferences the broadcast: stringifying a plan (explain, error
+  // messages) must not fetch it, nor fail once it is destroyed
+  override def toString: String = s"$prettyName($pathExpr, $idxExpr)"
   override def sql: String = s"$prettyName(${pathExpr.sql}, ${idxExpr.sql})"
 }
 

@@ -6,9 +6,11 @@ import graft.util.{Fs, Jsons}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, MetadataBuilder, StructField, StructType}
 
 import java.util.UUID
+import java.util.concurrent.{ExecutionException, TimeUnit, TimeoutException}
 
 /** Write mode for the Delta sink (reference `sinks/delta.py:10-29`). */
 sealed trait DeltaWriteMode
@@ -131,8 +133,8 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     if (adds.isEmpty) return 0L
     val marked = scanAddsWithRowMeta(tablePath, adds).filter(condition)
       .select(col(RowMetaFile), col(RowMetaIndex))
-    dvDeleteCommit(tablePath, adds, marked, Seq.empty, Seq.empty, None,
-      readVersion, "DELETE")._2
+    dvCommit(tablePath, adds, dvFold(tablePath, adds, marked), Seq.empty,
+      Seq.empty, None, readVersion, "DELETE")._2
   }
 
   private[graft] val RowMetaFile = "__file_path"
@@ -173,46 +175,35 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       .drop("_metadata")
   }
 
-  /** The shared DV-delete commit: fold `marked` ([[RowMetaFile]],
-    * [[RowMetaIndex]]) into one bitmap per file ([[DvRowAgg]] — map-side
-    * partial aggregation, the exchange carries bitmaps, never row lists),
-    * then hand the folded bitmaps to a bounded set of WRITER TASKS
+  /** The DV fold: fold `marked` ([[RowMetaFile]], [[RowMetaIndex]]) into
+    * one bitmap per file ([[DvRowAgg]] — map-side partial aggregation, the
+    * exchange carries bitmaps, never row lists), then hand the folded
+    * bitmaps to a bounded set of WRITER TASKS
     * ([[DeletionVector.writeDvPartition]]) that union with existing
     * vectors, drop files whose every physical row is now deleted, and
-    * write the `.bin` frames executor-side — the driver collects only
-    * `(path, descriptor)` rows and commits the re-adds together with
-    * `extraParts` (a DV merge's appended payload) and `cdcParts` in ONE
-    * atomic commit. No bitmap byte ever materializes on the driver
-    * ([[DeletionVector.driverBitmapBytes]] pins this): a delete touching
-    * millions of files holds millions of descriptors driver-side — the
-    * same O(#files) metadata any delta commit holds — not billions of
-    * deleted-row bits. Returns (version, deletedRows); no-op (-1, 0) when
-    * nothing matched and nothing is appended. */
-  private[graft] def dvDeleteCommit(tablePath: String,
-      candidates: Seq[DeltaAction.AddFile], marked: DataFrame,
-      extraParts: Seq[WrittenPart], cdcParts: Seq[(String, Long)],
-      txn: Option[(String, Long)], readVersion: Long,
-      operation: String,
-      schemaOverride: Option[StructType] = None,
-      mintedMaxColumnId: Option[Long] = None): (Long, Long) = {
+    * write the `.bin` frames executor-side. The driver collects only one
+    * [[DvWriteResult]] per touched file. No bitmap byte ever materializes
+    * on the driver ([[DeletionVector.driverBitmapBytes]] pins this): a
+    * delete touching millions of files holds millions of descriptors
+    * driver-side — the same O(#files) metadata any delta commit holds —
+    * not billions of deleted-row bits. Writes only unreferenced `.bin`
+    * files, so it needs no lock and can run beside a payload write; the
+    * files become visible only through [[dvCommit]]. */
+  private def dvFold(tablePath: String, candidates: Seq[DeltaAction.AddFile],
+      marked: DataFrame): Seq[DvWriteResult] = {
     import org.apache.spark.sql.Encoders
     import org.apache.spark.sql.functions.{col, count, lit, udaf}
-    val declared = log.tableSchemaString(tablePath)
-      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
     val dvAgg = udaf(new DvRowAgg(), Encoders.scalaLong)
-    val byNorm = candidates.map(a =>
-      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> a).toMap
     // metadata the writer tasks need, keyed by normalized file path —
     // descriptors and row counts only, O(#files) small
-    val oldDvs: Map[String, DvDescriptor] = candidates.flatMap(a =>
-      a.deletionVector.map(d =>
-        DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> d)).toMap
-    def physRows(a: DeltaAction.AddFile): Option[Long] = a.stats.flatMap { s =>
+    def norm(a: DeltaAction.AddFile): String =
+      DeletionVector.normUri(log.resolvePath(tablePath, a.path))
+    val oldDvs: Map[String, DvDescriptor] =
+      candidates.flatMap(a => a.deletionVector.map(norm(a) -> _)).toMap
+    val phys: Map[String, Long] = candidates.flatMap(a => a.stats.flatMap { s =>
       try Jsons.optLong(Jsons.parse(s), "numRecords")
       catch { case scala.util.control.NonFatal(_) => None }
-    }
-    val phys: Map[String, Long] = candidates.flatMap(a => physRows(a).map(n =>
-      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> n)).toMap
+    }.map(norm(a) -> _)).toMap
     // ~64 files' vectors per .bin keeps test-scale commits at one packed
     // file (the pre-r7 shape) while a wide delete fans out to all cores
     val numTasks = math.max(1, math.min((candidates.size + 63) / 64,
@@ -231,13 +222,30 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     val routed =
       if (numTasks == 1) folded.coalesce(1)
       else folded.repartition(numTasks)
-    val results: Seq[DvWriteResult] = routed
+    routed
       .mapPartitions(folds => DeletionVector.writeDvPartition(
         tablePath, serConf.value, oldDvs, phys)(folds))(
         Encoders.product[DvWriteResult])
       .collect().toSeq
-    if (results.isEmpty && extraParts.isEmpty && cdcParts.isEmpty) return (-1L, 0L)
+  }
 
+  /** The shared DV-delete commit: re-add every file in the fold's
+    * `results` with its new vector (or plain-remove it when fully
+    * deleted) together with `extraParts` (a DV merge's appended payload)
+    * and `cdcParts` in ONE atomic commit. Returns (version, deletedRows);
+    * no-op (-1, 0) when nothing matched and nothing is appended. */
+  private def dvCommit(tablePath: String,
+      candidates: Seq[DeltaAction.AddFile], results: Seq[DvWriteResult],
+      extraParts: Seq[WrittenPart], cdcParts: Seq[(String, Long)],
+      txn: Option[(String, Long)], readVersion: Long,
+      operation: String,
+      schemaOverride: Option[StructType] = None,
+      mintedMaxColumnId: Option[Long] = None): (Long, Long) = {
+    if (results.isEmpty && extraParts.isEmpty && cdcParts.isEmpty) return (-1L, 0L)
+    val declared = log.tableSchemaString(tablePath)
+      .map(s => DataType.fromJson(s).asInstanceOf[StructType])
+    val byNorm = candidates.map(a =>
+      DeletionVector.normUri(log.resolvePath(tablePath, a.path)) -> a).toMap
     def addOf(path: String): DeltaAction.AddFile =
       byNorm.getOrElse(DeletionVector.normUri(path),
         throw new GraftError(s"matched file $path not in snapshot"))
@@ -273,11 +281,19 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     * same commit: the metaData action grows the new nullable columns, and
     * old rows null-fill them at READ (Delta semantics make this free —
     * scans apply the declared schema, absent columns read NULL — so
-    * widening costs no rewrite either). Returns deleted-row count. */
+    * widening costs no rewrite either). The payload passes the same
+    * write projection as every other write ([[conform]]: generated
+    * columns computed, CHECK constraints and invariants guarded inline).
+    *
+    * Job structure: the fold ([[dvFold]]) and the payload + CDF writes
+    * are independent until the commit, so the fold runs on a second
+    * driver thread ([[DeltaWriter.concurrently]]) while this thread
+    * writes the parts; the commit waits for both. A failure on either
+    * side commits nothing and surfaces that side's own exception.
+    * Returns deleted-row count. */
   private[graft] def dvMerge(tablePath: String, candidates: Seq[DeltaAction.AddFile],
       marked: DataFrame, payload: DataFrame, cdfChanges: Option[DataFrame],
       txn: Option[(String, Long)], readVersion: Long): Long = {
-    import org.apache.spark.sql.functions.{col, lit}
     val root = new Path(tablePath)
     val fs = Fs.fs(root, conf)
     val declared = log.tableSchemaString(tablePath)
@@ -294,28 +310,29 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       else None
     val outSchema = StructType(declared.fields ++
       minted.map(_._1).getOrElse(newCols.map(_.copy(nullable = true))))
-    val aligned = payload.select(outSchema.fields.toSeq.map(f =>
-      (if (payload.columns.contains(f.name)) col(f.name).cast(f.dataType)
-       else lit(null).cast(f.dataType)).as(f.name)): _*)
     // appended payload files carry physical names on a mapped table; the
     // hive layout (path-derived partCols) is already physical there
-    val toWrite =
-      if (mapped) ColumnMapping.toPhysical(aligned, outSchema) else aligned
+    val toWrite = conform(payload, outSchema,
+      log.tableConfigurationJson(tablePath), mapped)
     val effectiveParts = partitionColumnsOf(tablePath)
-    val parts =
-      if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
-      else writePartitionedParts(toWrite, root, effectiveParts)
-    val cdcParts = cdfChanges.map { ch =>
-      val cdcDir = new Path(root, "_change_data")
-      fs.mkdirs(cdcDir)
-      val out =
-        if (mapped) ColumnMapping.cdcToPhysical(ch, outSchema,
-          keep = Seq(graft.Cdc.ChangeTypeCol))
-        else ch
-      writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
-        (s"_change_data/${p.path}", p.size))
-    }.getOrElse(Seq.empty)
-    dvDeleteCommit(tablePath, candidates, marked, parts, cdcParts, txn,
+    val (results, (parts, cdcParts)) = DeltaWriter.concurrently(marked.sparkSession)(
+      dvFold(tablePath, candidates, marked)) {
+      val parts =
+        if (effectiveParts.isEmpty) writeParts(toWrite, root, fs, prefix = "part")
+        else writePartitionedParts(toWrite, root, effectiveParts)
+      val cdcParts = cdfChanges.map { ch =>
+        val cdcDir = new Path(root, "_change_data")
+        fs.mkdirs(cdcDir)
+        val out =
+          if (mapped) ColumnMapping.cdcToPhysical(ch, outSchema,
+            keep = Seq(graft.Cdc.ChangeTypeCol))
+          else ch
+        writeParts(out, cdcDir, fs, prefix = "cdc").map(p =>
+          (s"_change_data/${p.path}", p.size))
+      }.getOrElse(Seq.empty)
+      (parts, cdcParts)
+    }
+    dvCommit(tablePath, candidates, results, parts, cdcParts, txn,
       readVersion, "MERGE",
       schemaOverride = if (newCols.isEmpty) None else Some(outSchema),
       mintedMaxColumnId = minted.map(_._2))._2
@@ -1008,29 +1025,7 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
       throw new GraftError(
         s"delta table $tablePath is append-only (delta.appendOnly=true); " +
         "overwrite would replace existing data")
-    // conform df to outSchema column order; a missing column null-fills
-    // UNLESS it is a generated column, which must be COMPUTED (the
-    // generatedColumns writer obligation — a null-filled generated column
-    // diverges from what every other engine derives from the same row)
-    val generatedExprs = WriteChecks.generatedOf(outSchema).toMap
-    val aligned = {
-      import org.apache.spark.sql.functions.{col, expr, lit}
-      df.select(outSchema.fields.map(f =>
-        if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-        else generatedExprs.get(f.name)
-          .map(g => expr(g).cast(f.dataType).as(f.name))
-          .getOrElse(lit(null).cast(f.dataType).as(f.name))).toSeq: _*)
-    }
-    // CHECK constraints / column invariants / provided generated columns
-    // validate INSIDE the write projection (no second pass; see
-    // [[WriteChecks]]) — a violating row fails the job before any commit
-    val checked = WriteChecks.enforce(aligned, outSchema, tableConfig,
-      df.columns.toSet)
-    // physical rename uses OUT schema so minted columns write under their
-    // fresh col-<uuid> names
-    val toWrite =
-      if (mappedSchema.isDefined) ColumnMapping.toPhysical(checked, outSchema)
-      else checked
+    val toWrite = conform(df, outSchema, tableConfig, mappedSchema.isDefined)
 
     // the hive layout uses PHYSICAL partition column names on a mapped
     // table (toWrite's columns are already physical); metaData
@@ -1065,6 +1060,31 @@ class DeltaWriter(spark: SparkSession, conf: Configuration,
     })
     commit(tablePath, operation, outSchema, removed, parts, cdcParts,
       effectiveParts, txn, readVersion, mintedMaxColumnId = minted.map(_._2))
+  }
+
+  /** The write projection every data write shares: conform `df` to
+    * `outSchema`'s column order and types, where a missing column
+    * null-fills UNLESS it is a generated column, which must be COMPUTED
+    * (the generatedColumns writer obligation — a null-filled generated
+    * column diverges from what every other engine derives from the same
+    * row). CHECK constraints / column invariants / provided generated
+    * columns validate INSIDE the projection (no second pass; see
+    * [[WriteChecks]]) — a violating row fails the job before any commit.
+    * On a column-mapped table the result carries the PHYSICAL names of
+    * `outSchema`, so freshly minted columns write under their
+    * `col-<uuid>` names. */
+  private def conform(df: DataFrame, outSchema: StructType,
+      tableConfig: Option[String], mapped: Boolean): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, lit}
+    val generatedExprs = WriteChecks.generatedOf(outSchema).toMap
+    val aligned = df.select(outSchema.fields.map(f =>
+      if (df.columns.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
+      else generatedExprs.get(f.name)
+        .map(g => expr(g).cast(f.dataType).as(f.name))
+        .getOrElse(lit(null).cast(f.dataType).as(f.name))).toSeq: _*)
+    val checked = WriteChecks.enforce(aligned, outSchema, tableConfig,
+      df.columns.toSet)
+    if (mapped) ColumnMapping.toPhysical(checked, outSchema) else checked
   }
 
   /** Write df's parquet parts RENAME-FREE into a fresh uniquely-named data
@@ -1618,6 +1638,42 @@ object DeltaWriter {
     * sharing this JVM's session (the commit-protocol conf and the
     * partitioned-write registry key are not per-writer). */
   private[delta] val sessionWriteLock = new Object
+
+  /** The driver threads [[concurrently]] runs its side work on. More
+    * concurrent callers than threads queue, which only delays them: side
+    * work never waits on a caller. */
+  private lazy val sidePool = Bridge.daemonThreadPool("graft-delta-side", 4)
+
+  /** Run `side` on a second driver thread while `main` runs on this one;
+    * returns both results. `side` runs with this thread's Spark context
+    * captured ([[Bridge.withThreadLocalCaptured]]: job tags, job group,
+    * active session), so its jobs are attributed and cancelled with the
+    * caller's. When `main` fails, `side`'s jobs are cancelled and waited
+    * for, then `main`'s exception is rethrown; when `side` fails, its own
+    * exception (not an ExecutionException) is rethrown once `main` has
+    * finished. Either way no job of either is left running. */
+  private[delta] def concurrently[A, B](session: SparkSession)(side: => A)(
+      main: => B): (A, B) = {
+    val sc = session.sparkContext
+    val tag = s"graft-side-${UUID.randomUUID()}"
+    val pending = Bridge.withThreadLocalCaptured(session, sidePool) {
+      sc.addJobTag(tag)
+      side
+    }
+    val b =
+      try main
+      catch { case t: Throwable =>
+        // a job `side` launches after one cancel is caught by the next
+        while (!pending.isDone) {
+          sc.cancelJobsWithTag(tag)
+          try pending.get(100, TimeUnit.MILLISECONDS)
+          catch { case _: TimeoutException | _: ExecutionException => }
+        }
+        throw t
+      }
+    val a = try pending.get() catch { case e: ExecutionException => throw e.getCause }
+    (a, b)
+  }
 
   /** Can OUR commit (given its operation and remove set) be re-applied
     * on top of `intervening` commits that won earlier versions? None = yes,

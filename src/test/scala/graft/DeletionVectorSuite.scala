@@ -468,6 +468,25 @@ class DeletionVectorSuite extends SparkSpec {
     }
   }
 
+  test("a DV-filtered plan stringifies without touching the vector broadcast") {
+    withTmpDir { tmp =>
+      import org.apache.spark.sql.functions.col
+      val t = s"$tmp/table"
+      val w = writer
+      w.write(spark.range(0, 10).toDF("id"), t, DeltaWriteMode.Append)
+      w.deleteWhere(t, col("id") === 3L)
+      val df = w.read(t)
+      val probes = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(
+        _.collect { case p: graft.delta.DvProbeExpr => p }))
+      assert(probes.nonEmpty, "the read must filter through a DV probe")
+      // explain output and error messages render the plan; neither may
+      // fetch the broadcast, nor fail once it is gone
+      probes.foreach(_.meta.destroy())
+      val text = df.queryExecution.toString
+      assert(text.contains("dv_deleted"), text)
+    }
+  }
+
   test("compact leaves DV-bearing files alone; tailing a DV commit needs ignoreChanges") {
     withTmpDir { tmp =>
       val t = s"$tmp/table"

@@ -238,6 +238,62 @@ class DeltaProtocolComplianceSuite extends SparkSpec with DeltaFixtures {
     }
   }
 
+  test("deletion-vector merges enforce CHECK constraints like every write") {
+    withTmpDir { tmp =>
+      val w = writer
+      val t = s"$tmp/dvck"
+      w.write((0L until 10L).map(i => (i, i)).toDF("id", "v").coalesce(1),
+        t, DeltaWriteMode.Append)
+      w.addCheckConstraint(t, "v_nonneg", "v >= 0")
+      val before = log.latestVersion(t).get
+      val bad = Seq((3L, -5L, "update_postimage", 1L))
+        .toDF("id", "v", Cdc.ChangeTypeCol, Cdc.CommitVersionCol)
+      // both merge shapes refuse the row, name the constraint, commit nothing
+      for (strategy <- Seq(MergeStrategy.Auto, MergeStrategy.Rewrite)) {
+        val e = intercept[Exception](
+          DeltaCdc.applyCdcDelta(spark, bad, t, Seq("id"), strategy = strategy))
+        val msg = Option(e.getMessage).getOrElse("") +
+          Option(e.getCause).map(_.getMessage).getOrElse("")
+        assert(msg.contains("v_nonneg"), s"$strategy: constraint name absent: $msg")
+        assert(log.latestVersion(t).get === before, s"$strategy committed")
+      }
+      assert(w.read(t).filter(col("v") < 0).count() === 0L)
+      // a conforming upsert still goes through the DV path
+      val ok = Seq((3L, 33L, "update_postimage", 1L))
+        .toDF("id", "v", Cdc.ChangeTypeCol, Cdc.CommitVersionCol)
+      DeltaCdc.applyCdcDelta(spark, ok, t, Seq("id"))
+      assert(log.readCommit(t, before + 1).adds.exists(_.deletionVector.isDefined))
+      assert(w.read(t).filter(col("id") === 3L).select("v").as[Long].collect()
+        .toSeq === Seq(33L))
+    }
+  }
+
+  test("deletion-vector merges compute an omitted generated column") {
+    withTmpDir { tmp =>
+      val w = writer
+      val t = s"$tmp/dvgen"
+      w.write((0L until 10L).map(i => (i, i * 2)).toDF("id", "twice").coalesce(1),
+        t, DeltaWriteMode.Append)
+      val genSchema = StructType(Seq(
+        StructField("id", LongType, true),
+        StructField("twice", LongType, true, new MetadataBuilder()
+          .putString("delta.generationExpression", "id * 2").build())))
+      foreignAlter(t, Map.empty, Some(
+        """{"protocol": {"minReaderVersion": 1, "minWriterVersion": 4}}"""),
+        schemaOverride = Some(genSchema))
+      val changes = Seq((4L, "update_postimage", 1L), (40L, "insert", 1L))
+        .toDF("id", Cdc.ChangeTypeCol, Cdc.CommitVersionCol)
+      DeltaCdc.applyCdcDelta(spark, changes, t, Seq("id"),
+        strategy = MergeStrategy.DeletionVectors)
+      val v = log.latestVersion(t).get
+      assert(log.readCommit(t, v).adds.exists(_.deletionVector.isDefined))
+      val got = w.read(t).filter(col("id").isin(4L, 40L)).orderBy("id")
+        .select("id", "twice").as[(Long, Long)].collect().toSeq
+      assert(got === Seq((4L, 8L), (40L, 80L)),
+        "a DV merge must compute the generated column, not null-fill it")
+    }
+  }
+
   test("domainMetadata actions survive checkpoint + log expiry") {
     withTmpDir { tmp =>
       val w = writer
