@@ -6,8 +6,11 @@ import java.nio.file.{Files, Paths}
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * before/after plan evidence an optimization round commits alongside the
-  * bench numbers ([[PlanDump]] prints the one-line exchange economy; this
-  * writes the full formatted plan the round's write-up cites).
+  * bench numbers — and print each query's exchange economy on one line:
+  * shuffle / broadcast / reused-exchange counts, the quick check to run
+  * after adding or reshaping an operator ([[PlanAudit]] sweeps for
+  * FORBIDDEN shapes; this shows the cost shape, so a regression from one
+  * exchange to four is visible before the bench run).
   *
   * Run: sbt "runMain graft.examples.PlanExplain <sfDir> <outDir> <suffix> <query> [query…]"
   * Writes <outDir>/<query>_<suffix>.txt per query.
@@ -26,7 +29,15 @@ object PlanExplain {
       val formatted = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), formatted)
-      println(s"wrote $outDir/${name}_$suffix.txt (${formatted.length} chars)")
+      val plan = df.queryExecution.executedPlan.toString
+      // shuffles only: a bare "Exchange" count would also match
+      // BroadcastExchange/ReusedExchange and misread exactly when
+      // comparing runs (a broadcast added vs a shuffle added)
+      val nShuffle = "Exchange (hash|range|Single)".r.findAllIn(plan).length
+      val nBr = "BroadcastExchange".r.findAllIn(plan).length
+      val nReused = "ReusedExchange".r.findAllIn(plan).length
+      println(s"wrote $outDir/${name}_$suffix.txt (${formatted.length} chars) " +
+        s"shuffles=$nShuffle broadcasts=$nBr reused=$nReused")
     }
     spark.stop()
   }

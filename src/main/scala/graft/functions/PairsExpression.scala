@@ -2,230 +2,169 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
-/** Codegen'd in-bucket pair generation for the LSH/simhash dedup
-  * families — the fused replacement for the interpreted
-  * `flatten(transform(sorted, (x, i) => transform(slice(sorted, i+2, n),
-  * y => struct(x, y))))` formulation (`Dedup.pairStructs`), which paid a
-  * Catalyst-lambda dispatch per PAIR: a template-heavy corpus puts
-  * thousands of members into one hot bucket, and C(1900, 2) ≈ 1.8M
-  * interpreted struct-of-struct allocations in ONE task was the measured
-  * wall of `d_simhash_pairs_poly` at sf0.1 (4.1 s of a 5.2 s query).
-  * Each kernel is one tight primitive loop per bucket row inside
-  * whole-stage codegen.
+/** In-bucket pair generation for the near-dup families (LSH minhash,
+  * simhash/Manku, winnowing, the incremental near-dup fold): the (i < j)
+  * pairs of a sorted bucket membership, as a Catalyst [[Generator]].
   *
-  * Parity contract (suite-pinned in PairsKernelSuite, oracle-gated by
-  * every consuming query):
-  *  - pairs are exactly the (i, j), i < j, combinations IN ARRAY ORDER —
-  *    the operators pass `array_sort`ed memberships, so emitted order and
-  *    id ordering match the HOF formulation element for element;
-  *  - [[Hash64HammingPairs]] additionally applies the
-  *    `bit_count(a.sh ^ b.sh) <= maxHamming` verify INSIDE the loop —
-  *    dropping a failing pair exactly where the old plan's post-explode
-  *    filter dropped it, so millions of non-near-dup candidates no longer
-  *    materialize as rows at all. A null element or a null `sh` field
-  *    yields a null XOR → null hamming, which the old filter dropped —
-  *    the kernel skips those pairs identically. A null `id` rides
-  *    through (the old struct carried it; such pairs survived when their
-  *    hamming passed).
-  */
-object PairsKernel {
-  private val HamOut = Array[DataType](LongType, LongType, IntegerType)
+  * Two forms, one iterator:
+  *  - `maxHamming = None` over `array<T>` (any id type T) yields
+  *    `(id_a: T, id_b: T)` rows;
+  *  - `maxHamming = Some(h)` over `array<struct<id: T, sh: long>>` yields
+  *    `(id_a: T, id_b: T, hamming: int)` rows for the pairs with
+  *    `bit_count(a.sh ^ b.sh) <= h` — the verify runs inside the loop,
+  *    so a hot bucket's failing candidates never become rows.
+  *
+  * Contract (pinned by PairsKernelSuite against the interpreted
+  * `flatten(transform(transform(...)))` formulation it replaced, and
+  * oracle-gated by every consuming query):
+  *  - pairs come out (i, j), i < j, IN ARRAY ORDER;
+  *  - a null `id` rides through as a null field; in the Hamming form a
+  *    null element or a null `sh` drops every pair it is in (its XOR is
+  *    null, which the old post-explode filter dropped);
+  *  - rows are produced LAZILY: per bucket row the generator holds the
+  *    unpacked members (O(n)), never the C(n, 2) pairs, and never
+  *    computes the pair count — a bucket past 65,536 members (where that
+  *    count leaves Int range) pairs like any other.
+  *
+  * `doGenCode` keeps `GenerateExec` inside whole-stage codegen (a
+  * `CodegenFallback` generator would split the stage); the pair loop
+  * itself is the compiled [[BucketPairs.PairIterator]]. */
+case class BucketPairs(sortedItems: Expression, maxHamming: Option[Int])
+    extends UnaryExpression with Generator {
 
-  /** All (i < j) pairs with Hamming(sh_i, sh_j) <= maxHamming from a
-    * bucket's `array<struct<id: long, sh: long>>` membership. Returns
-    * `array<struct<id_a, id_b, hamming>>`. */
-  def hammingPairs(items: ArrayData, maxHamming: Int): ArrayData = {
-    if (items == null) return new GenericArrayData(Array.empty[Any])
-    val n = items.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    // unpack once: the O(n^2) loop then runs over primitive arrays
-    val ids = new Array[Long](n)
-    val idNull = new Array[Boolean](n)
-    val shs = new Array[Long](n)
-    val dead = new Array[Boolean](n) // null element / null sh: every pair dropped
-    var i = 0
-    while (i < n) {
-      if (items.isNullAt(i)) dead(i) = true
-      else {
-        val row = items.getStruct(i, 2)
-        if (row.isNullAt(1)) dead(i) = true
-        else {
-          shs(i) = row.getLong(1)
-          if (row.isNullAt(0)) idNull(i) = true else ids(i) = row.getLong(0)
-        }
-      }
-      i += 1
+  override def child: Expression = sortedItems
+
+  @transient private lazy val idType: DataType =
+    (sortedItems.dataType, maxHamming) match {
+      case (ArrayType(st: StructType, _), Some(_)) if st.nonEmpty => st.head.dataType
+      case (ArrayType(et, _), None) => et
+      case _ => NullType
     }
-    val out = scala.collection.mutable.ArrayBuilder.make[Any]
-    i = 0
-    while (i < n) {
-      if (!dead(i)) {
-        val shi = shs(i)
-        var j = i + 1
-        while (j < n) {
-          if (!dead(j)) {
-            val h = java.lang.Long.bitCount(shi ^ shs(j))
-            if (h <= maxHamming)
-              out += new GenericInternalRow(Array[Any](
-                if (idNull(i)) null else ids(i),
-                if (idNull(j)) null else ids(j), h))
-          }
-          j += 1
-        }
-      }
-      i += 1
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    (sortedItems.dataType, maxHamming) match {
+      case (ArrayType(_, _), None) => TypeCheckResult.TypeCheckSuccess
+      case (ArrayType(StructType(Array(_, StructField(_, LongType, _, _))), _),
+          Some(_)) => TypeCheckResult.TypeCheckSuccess
+      case (t, None) =>
+        TypeCheckResult.TypeCheckFailure(s"bucket_pairs requires an array, got $t")
+      case (t, Some(_)) => TypeCheckResult.TypeCheckFailure(
+        s"bucket_pairs with a Hamming budget requires array<struct<id, sh: long>>, got $t")
     }
-    new GenericArrayData(out.result())
+
+  // every field nullable: null ids pass through, and the schema matches
+  // the struct fields of the formulation this replaced
+  override def elementSchema: StructType = {
+    val ids = new StructType().add("id_a", idType).add("id_b", idType)
+    if (maxHamming.isEmpty) ids else ids.add("hamming", IntegerType)
   }
 
-  /** All (i < j) pairs from a bucket's `array<long>` membership —
-    * `array<struct<a, b>>`, the [[Dedup.candidatePairs]] shape. A null
-    * element pairs through as a null field, exactly as the HOF built
-    * `struct(null, y)`. */
-  def idPairs(items: ArrayData): ArrayData = {
-    if (items == null) return new GenericArrayData(Array.empty[Any])
-    val n = items.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    val ids = new Array[Long](n)
-    val idNull = new Array[Boolean](n)
-    var i = 0
-    while (i < n) {
-      if (items.isNullAt(i)) idNull(i) = true else ids(i) = items.getLong(i)
-      i += 1
-    }
-    val out = new Array[Any](n * (n - 1) / 2)
+  /** The pairs of one bucket; a null or sub-2 membership yields none. */
+  def pairs(items: ArrayData): Iterator[InternalRow] = {
+    val n = if (items == null) 0 else items.numElements()
+    if (n < 2) return Iterator.empty
+    // unpack once (ids copied off the input row's buffer); the pair walk
+    // then runs over plain arrays
+    val ids = new Array[Any](n)
+    val dead = new Array[Boolean](n)
+    val shs = if (maxHamming.isDefined) new Array[Long](n) else null
     var k = 0
-    i = 0
-    while (i < n) {
-      var j = i + 1
-      while (j < n) {
-        out(k) = new GenericInternalRow(Array[Any](
-          if (idNull(i)) null else ids(i),
-          if (idNull(j)) null else ids(j)))
-        k += 1
-        j += 1
+    while (k < n) {
+      if (shs == null) {
+        if (!items.isNullAt(k)) ids(k) = InternalRow.copyValue(items.get(k, idType))
+      } else if (items.isNullAt(k)) dead(k) = true
+      else {
+        val m = items.getStruct(k, 2)
+        if (m.isNullAt(1)) dead(k) = true
+        else {
+          shs(k) = m.getLong(1)
+          if (!m.isNullAt(0)) ids(k) = InternalRow.copyValue(m.get(0, idType))
+        }
       }
-      i += 1
+      k += 1
     }
-    new GenericArrayData(out)
+    new BucketPairs.PairIterator(ids, dead, shs, maxHamming.getOrElse(64))
   }
-}
 
-/** `array<struct<id_a: long, id_b: long, hamming: int>>` — the verified
-  * in-bucket near-dup pairs of a sorted `array<struct<id, sh>>` bucket
-  * membership (see [[PairsKernel.hammingPairs]]). */
-case class Hash64HammingPairs(child: Expression, maxHamming: Int)
-    extends UnaryExpression {
-
-  // every field declared nullable like the HOF formulation's struct
-  // fields were (schema parity for the Verify dump; values are never
-  // null for hamming — passing pairs always carry one)
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("id_a", LongType, nullable = true),
-    StructField("id_b", LongType, nullable = true),
-    StructField("hamming", IntegerType, nullable = true))),
-    containsNull = false)
-  // a null input array yields an EMPTY pair array (the old plan's
-  // explode over a null HOF result emitted no rows either way)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StructType(Array(
-          StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure(
-          s"hash64_hamming_pairs requires array<struct<long, long>>, got $t")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    PairsKernel.hammingPairs(v, maxHamming)
-  }
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    pairs(sortedItems.eval(input).asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val kernel = PairsKernel.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
+    val childGen = sortedItems.genCode(ctx)
+    val self = ctx.addReferenceObj("bucketPairs", this)
     ev.copy(
       code = childGen.code +
         code"""
-          |$ad ${ev.value} = $kernel.hammingPairs(
-          |  ${childGen.isNull} ? null : ${childGen.value}, $maxHamming);
+          |scala.collection.Iterator ${ev.value} =
+          |  $self.pairs(${childGen.isNull} ? null : ${childGen.value});
           |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
+      isNull = FalseLiteral)
   }
 
-  override protected def withNewChildInternal(newChild: Expression)
-      : Hash64HammingPairs = copy(child = newChild)
+  override protected def withNewChildInternal(newChild: Expression): BucketPairs =
+    copy(sortedItems = newChild)
 
-  override def prettyName: String = "hash64_hamming_pairs"
+  override def prettyName: String = "bucket_pairs"
   override def toString: String =
-    s"hash64_hamming_pairs(${child}, maxHamming=$maxHamming)"
-  override def sql: String = s"hash64_hamming_pairs(${child.sql})"
+    s"$prettyName($sortedItems${maxHamming.fold("")(h => s", maxHamming=$h")})"
 }
 
-/** `array<struct<a: long, b: long>>` — all (i < j) id pairs of a sorted
-  * `array<long>` bucket membership (see [[PairsKernel.idPairs]]). */
-case class LongIdPairs(child: Expression) extends UnaryExpression {
+object BucketPairs {
+  /** Walks (i, j), i < j, in array order, skipping dead members and (when
+    * `shs` is set) pairs over the Hamming budget; one row per pair. */
+  private[functions] final class PairIterator(ids: Array[Any],
+      dead: Array[Boolean], shs: Array[Long], maxHamming: Int)
+      extends Iterator[InternalRow] {
+    private[this] val n = ids.length
+    private[this] var i = 0
+    private[this] var j = 1 // next partner of i to test
+    private[this] var pending: InternalRow = null
 
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("a", LongType, nullable = true),
-    StructField("b", LongType, nullable = true))), containsNull = false)
-  override def nullable: Boolean = false
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(LongType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-        .TypeCheckFailure(s"long_id_pairs requires array<long>, got $t")
+    override def hasNext: Boolean = pending != null || {
+      pending = advance()
+      pending != null
     }
 
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input).asInstanceOf[ArrayData]
-    PairsKernel.idPairs(v)
+    override def next(): InternalRow = {
+      if (!hasNext) throw new NoSuchElementException("no more bucket pairs")
+      val row = pending
+      pending = null
+      row
+    }
+
+    private def advance(): InternalRow = {
+      while (i < n - 1) {
+        if (j >= n || dead(i)) { i += 1; j = i + 1 }
+        else {
+          val b = j
+          j += 1
+          if (!dead(b)) {
+            if (shs == null) return new GenericInternalRow(Array[Any](ids(i), ids(b)))
+            val h = java.lang.Long.bitCount(shs(i) ^ shs(b))
+            if (h <= maxHamming)
+              return new GenericInternalRow(Array[Any](ids(i), ids(b), h))
+          }
+        }
+      }
+      null
+    }
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-    val childGen = child.genCode(ctx)
-    val kernel = PairsKernel.getClass.getName.stripSuffix("$") + "$.MODULE$"
-    val ad = "org.apache.spark.sql.catalyst.util.ArrayData"
-    ev.copy(
-      code = childGen.code +
-        code"""
-          |$ad ${ev.value} = $kernel.idPairs(
-          |  ${childGen.isNull} ? null : ${childGen.value});
-          |""".stripMargin,
-      isNull = org.apache.spark.sql.catalyst.expressions.codegen.FalseLiteral)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : LongIdPairs = copy(child = newChild)
-
-  override def prettyName: String = "long_id_pairs"
-  override def toString: String = s"long_id_pairs(${child})"
-  override def sql: String = s"long_id_pairs(${child.sql})"
 }
 
-/** Column-level entry points. */
+/** Column-level entry point. */
 object PairsFunctions {
-  /** verified near-dup pairs of a sorted `array<struct<id, sh>>` bucket. */
-  def hammingPairs(sortedItems: Column, maxHamming: Int): Column =
-    Bridge.column(Hash64HammingPairs(Bridge.expression(sortedItems), maxHamming))
-
-  /** all (i < j) id pairs of a sorted `array<long>` bucket. */
-  def idPairs(sortedIds: Column): Column =
-    Bridge.column(LongIdPairs(Bridge.expression(sortedIds)))
+  /** The (i < j) pairs of a sorted bucket: `(id_a, id_b)` rows from an
+    * `array<id>`, or, given a budget, `(id_a, id_b, hamming)` rows with
+    * Hamming <= `maxHamming` from an `array<struct<id, sh: long>>`. A
+    * generator: use it as the one generator of a `select`. */
+  def bucketPairs(sortedItems: Column, maxHamming: Option[Int] = None): Column =
+    Bridge.column(BucketPairs(Bridge.expression(sortedItems), maxHamming))
 }

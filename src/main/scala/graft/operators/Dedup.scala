@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.functions.PairsFunctions.bucketPairs
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -53,14 +54,6 @@ object Dedup {
     exact(df.withColumn("__fp", fingerprint(col(textCol))), Seq("__fp"), tieBreak)
       .drop("__fp")
 
-  /** All ordered pairs (aᵢ, aⱼ), i < j, from a sorted array — generated
-    * inside the bucket row, so pair explosion happens after the (cheap)
-    * bucket aggregation instead of via a bucket self-join. */
-  private def pairStructs(sorted: Column): Column =
-    flatten(transform(sorted, (x, i) =>
-      transform(slice(sorted, i + lit(2), size(sorted)), y =>
-        struct(x.as("a"), y.as("b")))))
-
   /** Bucket rows → aggregated buckets with membership bounded BEFORE the
     * aggregation: rank members per bucket (`row_number` over the same
     * partition key — rank 1 = smallest id, so truncation is deterministic),
@@ -85,25 +78,19 @@ object Dedup {
 
   /** Distinct candidate id pairs from bucketed rows. ONE shuffle (window +
     * groupBy on the bucket key); signature/bucket expressions upstream
-    * evaluate exactly once. The sorted member array is materialized in its
-    * own projection so `pairStructs` (which references it twice) doesn't
-    * re-sort per outer element in interpreted HOF eval. Long ids take the
-    * fused [[graft.functions.LongIdPairs]] kernel — one codegen loop per
-    * bucket instead of a Catalyst-lambda dispatch per PAIR (a hot bucket
-    * of c members costs C(c, 2) interpreted struct allocations in one
-    * task); pair set and order are identical (suite-pinned). */
+    * evaluate exactly once. Each sorted bucket's (i < j) pairs come from
+    * the lazy [[graft.functions.BucketPairs]] generator (any id type),
+    * so pair explosion happens after the (cheap) bucket aggregation
+    * instead of via a bucket self-join, and a hot bucket of c members
+    * streams its C(c, 2) pairs instead of materializing them. Buckets are
+    * sorted with `sort_array` (codegen'd), not `array_sort`, whose default
+    * comparator plans as an interpreted lambda; the two orders differ only
+    * in where null elements go, and a `collect_set` membership has none. */
   private def candidatePairs(
       rows: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
     val sorted = boundedBuckets(rows, bucketCols, collect_set(col("id")), maxBucket)
-      .select(array_sort(col("items")).as("sorted_ids"))
-    val pairs =
-      if (rows.schema("id").dataType ==
-          org.apache.spark.sql.types.LongType)
-        graft.functions.PairsFunctions.idPairs(col("sorted_ids"))
-      else pairStructs(col("sorted_ids"))
-    sorted.select(explode(pairs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
-      .distinct()
+      .select(sort_array(col("items")).as("sorted_ids"))
+    sorted.select(bucketPairs(col("sorted_ids"))).distinct()
   }
 
   /** Count of buckets whose membership exceeds `maxBucket` — the
@@ -689,38 +676,17 @@ object Dedup {
         manku16BlockKeys(col("sh")).as(Seq("block", "key")))
     val buckets = boundedBuckets(blockRows, Seq("block", "key"),
       collect_set(struct(col("id"), col("sh"))), maxBucket)
-    sortedHammingPairs(sigs, idCol, hashCol, buckets, maxHamming)
+    sortedHammingPairs(buckets, maxHamming)
   }
 
   /** Shared pair emission of [[hash64Pairs]]/[[hash64PairsWide]]: sort
-    * the bucket membership, generate (i < j) pairs, verify exact Hamming,
-    * distinct. (long, long) signatures take the fused
-    * [[graft.functions.Hash64HammingPairs]] kernel — pair generation AND
-    * the Hamming verify in one codegen loop per bucket, so a hot bucket's
-    * C(c, 2) non-matching candidates never materialize as rows (the
-    * interpreted `pairStructs` lambda dispatch per pair was 4.1 s of
-    * d_simhash_pairs_poly's 5.2 s at sf0.1, single-task); other id types
-    * keep the HOF formulation. Pair set identical either way
-    * (suite-pinned + oracle-gated). */
-  private def sortedHammingPairs(sigs: DataFrame, idCol: String,
-      hashCol: String, buckets: DataFrame, maxHamming: Int): DataFrame = {
-    val sorted = buckets.select(array_sort(col("items")).as("sorted_items"))
-    val longTyped = {
-      val lt = org.apache.spark.sql.types.LongType
-      sigs.schema(idCol).dataType == lt && sigs.schema(hashCol).dataType == lt
-    }
-    if (longTyped)
-      sorted.select(explode(graft.functions.PairsFunctions
-          .hammingPairs(col("sorted_items"), maxHamming)).as("p"))
-        .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-          col("p.hamming").as("hamming"))
-        .distinct()
-    else
-      sorted.select(explode(pairStructs(col("sorted_items"))).as("p"))
-        .select(col("p.a.id").as("id_a"), col("p.b.id").as("id_b"),
-          hamming64(col("p.a.sh"), col("p.b.sh")).as("hamming"))
-        .filter(col("hamming") <= maxHamming)
-        .distinct()
+    * the bucket membership, generate (i < j) pairs with the exact Hamming
+    * verify, distinct. The [[graft.functions.BucketPairs]] generator runs
+    * the verify inside its pair loop, so a hot bucket's C(c, 2)
+    * non-matching candidates never become rows, whatever the id type. */
+  private def sortedHammingPairs(buckets: DataFrame, maxHamming: Int): DataFrame = {
+    val sorted = buckets.select(sort_array(col("items")).as("sorted_items"))
+    sorted.select(bucketPairs(col("sorted_items"), Some(maxHamming))).distinct()
   }
 
   /** [[simhashPairs]] under the PORTABLE hash family — the
@@ -808,8 +774,8 @@ object Dedup {
     * key-count trade, now chosen by a measurement instead of a guess.
     *
     * Same one-exchange shape as [[hash64Pairs]]: explode (combo, key)
-    * rows, bounded buckets, sorted-pair explode, exact Hamming verify,
-    * distinct. Pair-set equality with [[hash64Pairs]] at the same
+    * rows, bounded buckets, sorted-bucket pairs with the exact Hamming
+    * verify, distinct. Pair-set equality with [[hash64Pairs]] at the same
     * budget is a suite LAW (both are exact for Hamming ≤ 3 under
     * uncapped buckets — same verified pairs through different keys). */
   def hash64PairsWide(sigs: DataFrame, idCol: String, hashCol: String,
@@ -822,7 +788,7 @@ object Dedup {
         col("ck.combo").as("combo"), col("ck.key").as("key"))
     val buckets = boundedBuckets(rows, Seq("combo", "key"),
       collect_set(struct(col("id"), col("sh"))), maxBucket)
-    sortedHammingPairs(sigs, idCol, hashCol, buckets, maxHamming)
+    sortedHammingPairs(buckets, maxHamming)
   }
 
   /** [[simhashPairs]] under the wide combination keys — for corpora past
@@ -1468,17 +1434,10 @@ object Dedup {
     val buckets = boundedBuckets(fpRows, Seq("fp"), collect_set(col("id")),
         maxBucket = maxDf + 1)
       .filter(size(col("items")) <= maxDf) // common fingerprint -> noise, drop
-    val sorted = buckets.select(array_sort(col("items")).as("sorted_ids"))
-    // long ids take the fused pair kernel (one codegen loop per bucket;
-    // the interpreted HOF paid a lambda dispatch per pair across every
-    // fingerprint bucket) — same dispatch as candidatePairs
-    val pairs =
-      if (base.schema("id").dataType == org.apache.spark.sql.types.LongType)
-        graft.functions.PairsFunctions.idPairs(col("sorted_ids"))
-      else pairStructs(col("sorted_ids"))
-    val candidates = sorted
-      .select(explode(pairs).as("p"))
-      .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
+    val sorted = buckets.select(sort_array(col("items")).as("sorted_ids"))
+    // every fingerprint bucket's (i < j) pairs, streamed by the same
+    // generator as candidatePairs
+    val candidates = sorted.select(bucketPairs(col("sorted_ids")))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("__shared"))
       .filter(col("__shared") >= minShared).drop("__shared")
     candidates

@@ -1,18 +1,24 @@
 package graft
 
-import graft.functions.PairsFunctions
+import graft.functions.{BucketPairs, PairsFunctions}
 import graft.functions.TextFunctions.hamming64
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-/** Parity laws for the fused in-bucket pair kernels
-  * ([[graft.functions.Hash64HammingPairs]] /
-  * [[graft.functions.LongIdPairs]]): pair set, pair ORDER within a
+/** Parity laws for the in-bucket pair generator
+  * ([[graft.functions.BucketPairs]]): pair set, pair ORDER within a
   * bucket, emitted Hamming values, and the null semantics must all be
-  * identical to the interpreted `pairStructs` HOF formulation they
-  * replaced — rebuilt here verbatim — including the adversarial corners:
-  * null elements, null id fields, null signature fields, empty and
-  * single-member buckets, budget 0, and budget 64 (everything passes). */
+  * identical to the interpreted `pairStructs` HOF formulation it
+  * replaced — rebuilt here verbatim — for long, int and string ids,
+  * including the adversarial corners: null elements, null id fields,
+  * null signature fields, empty and single-member buckets, budget 0, and
+  * budget 64 (everything passes). Plus the generator-level laws the HOF
+  * could not state: a bucket past the Int pair-count range pairs lazily
+  * and exactly. */
 class PairsKernelSuite extends SparkSpec {
   import spark.implicits._
 
@@ -24,7 +30,9 @@ class PairsKernelSuite extends SparkSpec {
 
   private val rng = new scala.util.Random(777)
 
-  private lazy val sigBuckets: DataFrame = {
+  private val Budgets = Seq(0, 3, 6, 16, 64)
+
+  private lazy val sigBucketsRaw: DataFrame = {
     def j(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
     // buckets of (id, sh) members: clustered signatures so some pairs
     // pass tight budgets, plus null corners
@@ -45,25 +53,42 @@ class PairsKernelSuite extends SparkSpec {
     buckets.zipWithIndex
       .map { case (ms, i) => (i, ms.map { case (a, b) => (a, b) }) }
       .toDF("bucket", "members")
-      .select(col("bucket"), col("members")
-        .cast("array<struct<id: bigint, sh: bigint>>").as("members"))
+  }
+
+  /** The signature buckets with ids cast to `idType`, plus a null-element
+    * bucket, each membership sorted. */
+  private def sigBuckets(idType: String): DataFrame = {
+    val members = s"array<struct<id: $idType, sh: bigint>>"
+    sigBucketsRaw
+      .select(col("bucket"), col("members").cast(members).as("members"))
+      .union(Seq(99).toDF("bucket").select(col("bucket"),
+        expr(s"cast(array(named_struct('id', 4L, 'sh', 7L), null, " +
+          s"named_struct('id', 8L, 'sh', 7L)) as $members)").as("members")))
       .select(col("bucket"), array_sort(col("members")).as("sorted_items"))
   }
 
   private def fmt(r: org.apache.spark.sql.Row): String = r.mkString("|")
 
-  test("hammingPairs == pairStructs + hamming filter, per budget") {
-    for (budget <- Seq(0, 3, 6, 16, 64)) {
-      // both sides ordered by (bucket, emission position): the kernel
+  /** The generator's rows per bucket in emission order: a bucket lives in
+    * one partition, where `monotonically_increasing_id` grows with row
+    * order. */
+  private def generated(df: DataFrame, items: String, budget: Option[Int],
+      cols: Seq[String]): Seq[String] =
+    df.select(col("bucket"), PairsFunctions.bucketPairs(col(items), budget))
+      .withColumn("pos", monotonically_increasing_id())
+      .orderBy("bucket", "pos")
+      .select((col("bucket") +: cols.map(col)): _*)
+      .collect().map(fmt).toSeq
+
+  private def hammingLaw(idType: String): Unit = {
+    val buckets = sigBuckets(idType)
+    for (budget <- Budgets) {
+      // both sides ordered by (bucket, emission position): the generator
       // must reproduce the HOF's surviving pairs AND their relative
       // order within every bucket
-      val nw = sigBuckets
-        .select(col("bucket"), posexplode(PairsFunctions
-          .hammingPairs(col("sorted_items"), budget)).as(Seq("pos", "p")))
-        .orderBy("bucket", "pos")
-        .select(col("bucket"), col("p.id_a"), col("p.id_b"), col("p.hamming"))
-        .collect().map(fmt)
-      val od = sigBuckets
+      val nw = generated(buckets, "sorted_items", Some(budget),
+        Seq("id_a", "id_b", "hamming"))
+      val od = buckets
         .select(col("bucket"),
           posexplode(pairStructsHof(col("sorted_items"))).as(Seq("pos", "p")))
         .select(col("bucket"), col("pos"), col("p.a.id").as("id_a"),
@@ -72,14 +97,14 @@ class PairsKernelSuite extends SparkSpec {
         .filter(col("hamming") <= budget)
         .orderBy("bucket", "pos")
         .select(col("bucket"), col("id_a"), col("id_b"), col("hamming"))
-        .collect().map(fmt)
-      assert(nw.toSeq == od.toSeq,
-        s"budget=$budget: kernel pairs diverge from the HOF formulation")
+        .collect().map(fmt).toSeq
+      assert(nw == od,
+        s"$idType ids, budget=$budget: generator pairs diverge from the HOF formulation")
       if (budget >= 16) assert(nw.nonEmpty, "law would be vacuous")
     }
   }
 
-  test("idPairs == pairStructs over plain long ids, order included") {
+  private def idLaw(idType: String): Unit = {
     def j(x: Long): java.lang.Long = java.lang.Long.valueOf(x)
     val buckets: Seq[Seq[java.lang.Long]] =
       Seq.fill(20)(Seq.fill(2 + rng.nextInt(10))(j(rng.nextInt(100).toLong))) ++
@@ -87,21 +112,36 @@ class PairsKernelSuite extends SparkSpec {
     val df = buckets.zipWithIndex.map { case (ms, i) => (i, ms) }
       .toDF("bucket", "members")
       .select(col("bucket"),
-        array_sort(col("members").cast("array<bigint>")).as("sorted_ids"))
-    val nw = df.select(col("bucket"),
-        posexplode(PairsFunctions.idPairs(col("sorted_ids"))).as(Seq("pos", "p")))
-      .select(col("bucket"), col("pos"), col("p.a"), col("p.b"))
-      .orderBy("bucket", "pos").collect().map(fmt)
+        array_sort(col("members").cast(s"array<$idType>")).as("sorted_ids"))
+    val nw = generated(df, "sorted_ids", None, Seq("id_a", "id_b"))
     val od = df.select(col("bucket"),
         posexplode(pairStructsHof(col("sorted_ids"))).as(Seq("pos", "p")))
       .select(col("bucket"), col("pos"), col("p.a"), col("p.b"))
-      .orderBy("bucket", "pos").collect().map(fmt)
-    assert(nw.toSeq == od.toSeq)
+      .orderBy("bucket", "pos")
+      .select(col("bucket"), col("a"), col("b"))
+      .collect().map(fmt).toSeq
+    assert(nw == od, s"$idType ids: generator pairs diverge from the HOF formulation")
+    assert(nw.exists(_.contains("null")), "null element corner would be vacuous")
+  }
+
+  test("hammingPairs == pairStructs + hamming filter, per budget") {
+    hammingLaw("bigint")
+  }
+
+  test("idPairs == pairStructs over plain long ids, order included") {
+    idLaw("bigint")
+  }
+
+  test("bucketPairs == pairStructs for int and string ids, both forms") {
+    for (t <- Seq("int", "string")) {
+      hammingLaw(t)
+      idLaw(t)
+    }
   }
 
   test("operator-level law: hash64Pairs fused == HOF shape on real-ish sigs") {
-    // long ids take the kernel; STRING ids take the legacy HOF path —
-    // both must produce the same pair set modulo the id representation
+    // long and STRING ids run the same generator — both must produce the
+    // same pair set modulo the id representation
     val sigs = (0L until 300L).map { i =>
       val base = if (i % 3 == 0) 0x0123456789abcdefL else 0x0fedcba987654321L
       (i, base ^ (1L << (i % 7)).toLong)
@@ -120,5 +160,38 @@ class PairsKernelSuite extends SparkSpec {
       .orderBy("id_a", "id_b").collect().map(fmt)
     assert(viaLong.toSeq == viaString.toSeq)
     assert(viaLong.nonEmpty, "law would be vacuous with no pairs")
+  }
+
+  // 65,537 members: C(n, 2) = 2,147,516,416 pairs, the first bucket size
+  // whose pair count exceeds Int.MaxValue
+  private val Big = 65537
+
+  private def bigBucket(elemType: DataType, elem: Int => Any): Literal =
+    Literal(new GenericArrayData(Array.tabulate[Any](Big)(elem)),
+      ArrayType(elemType, containsNull = false))
+
+  test("generator streams a bucket past the Int pair count, in (i, j) order") {
+    val pairs = BucketPairs(bigBucket(LongType, _.toLong), None)
+      .eval(InternalRow.empty).iterator
+    val expected = for {
+      i <- Iterator.range(0, Big)
+      j <- Iterator.range(i + 1, Big)
+    } yield (i.toLong, j.toLong)
+    val got = pairs.take(100000).map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(got == expected.take(100000).toSeq)
+  }
+
+  test("Hamming form over a bucket past the Int pair count finds only the planted pair") {
+    // member k < 65536 repeats k in all four 16-bit blocks, so two
+    // distinct members differ in >= 4 bits; the last member is member
+    // 12345 with one bit flipped: within budget 2 of it alone (>= 3 bits
+    // from every other member)
+    def rep(k: Long): Long = k | k << 16 | k << 32 | k << 48
+    val sig = StructType(Seq(StructField("id", LongType), StructField("sh", LongType)))
+    val items = bigBucket(sig, k =>
+      InternalRow(k.toLong, if (k < Big - 1) rep(k.toLong) else rep(12345L) ^ 1L))
+    val got = BucketPairs(items, Some(2)).eval(InternalRow.empty).iterator
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    assert(got == Seq((12345L, (Big - 1).toLong, 1)))
   }
 }

@@ -492,4 +492,19 @@ class PlanSuite extends SparkSpec {
     assert(hashExchanges === 0, s"per-document features must not shuffle:\n$plan")
     assert(hasCodegen(plan))
   }
+
+  test("bucket pairs stay a codegen'd Generate, with no lambda, in the pair-family queries") {
+    assume(available)
+    for (q <- Seq("d_minhash_pairs_poly", "d_simhash_pairs_poly", "d_winnow_pairs")) {
+      val plan = finalPlanOf(Queries.defs(q).build(spark, sfDir))
+      val generates = plan.linesIterator.filter(_.contains("Generate bucket_pairs")).toSeq
+      assert(generates.nonEmpty, s"$q: no bucket_pairs generator:\n$plan")
+      // `*(n)` marks an operator inside a WholeStageCodegen stage; a
+      // CodegenFallback generator would plan a bare `Generate`
+      assert(generates.forall("""\*\(\d+\) Generate""".r.findFirstIn(_).isDefined),
+        s"$q: the pair Generate fell out of whole-stage codegen:\n$plan")
+      assert(!plan.toLowerCase.contains("lambdafunction"),
+        s"$q: an interpreted lambda is back in the plan:\n$plan")
+    }
+  }
 }

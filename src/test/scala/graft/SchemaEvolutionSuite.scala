@@ -106,4 +106,16 @@ class SchemaEvolutionSuite extends SparkSpec {
       assert(out.schema("v").dataType === DoubleType)
     }
   }
+
+  test("query table reader re-infers a table rewritten in-process") {
+    withTmpDir { tmp =>
+      Seq((1L, "a")).toDF("id", "s").write.parquet(s"$tmp/tbl.parquet")
+      assert(Queries.t(spark, tmp, "tbl").columns.toSeq === Seq("id", "s"))
+      Seq((2L, "b", 7.5)).toDF("id", "s", "v")
+        .write.mode("overwrite").parquet(s"$tmp/tbl.parquet")
+      val rows = Queries.t(spark, tmp, "tbl").select("id", "s", "v").collect()
+      assert(rows.map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSeq ===
+        Seq((2L, "b", 7.5)))
+    }
+  }
 }
